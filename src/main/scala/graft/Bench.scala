@@ -1,7 +1,6 @@
 package graft
 import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,40 +8,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like every other entry point (Verify/PlanDump/SparkSpec):
-      // session-TZ-sensitive queries (unix_timestamp on NTZ, to_date)
-      // must bucket identically across hosts or timings aren't
-      // comparable machine to machine
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // reclaim per-iteration reliable-checkpoint files (Lineage.truncate)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // The ContextCleaner only reclaims dead broadcasts/RDDs after a
-      // driver GC surfaces their weak references; its fallback periodic
-      // GC defaults to 30 min — longer than the whole bench. 1 min
-      // keeps cleanup flowing even between our explicit drops.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      // FAIR job scheduling for the two streaming-audit rows' concurrent
-      // families/machines. HONEST ATTRIBUTION (r18, ADVICE r17): the
-      // mode conf alone is a NO-OP — without named pools every job sits
-      // in the single 'default' pool whose intra-pool order is FIFO.
-      // r17's "FIFO→FAIR" speedup was confounded with the concurrency-
-      // pool changes that landed the same round. Since r18 each family/
-      // machine thread names its own scheduler pool (StreamEquivalence
-      // sets spark.scheduler.pool per thread), which makes FAIR real;
-      // A/B'd on/off (spark.graft.fairpools=off) 2×7 interleaved runs
-      // at sf0.1/32 under co-tenant CPU+I/O load: NO measurable
-      // difference (mins 6.9-21 s both arms, noise-dominated). Kept
-      // because per-pool fair sharing is the correct shape when audits
-      // share an app with other tenants at production scale, and it
-      // costs nothing. Single-query rows see one job at a time either
-      // way.
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(s"local[$cpus]", cpus.toInt)
 
     // Measure queries, not session infrastructure. The first measured
     // query must pay NO residual warm-up, so the throwaway actions
@@ -52,9 +18,9 @@ object Bench {
     //    land on whichever query happens to read a table first,
     //    nondeterministically smearing seconds across the artifact
     //    (xxhash64(struct(*)) forces all columns through decode; a
-    //    bare count() would read only footers). Try-wrapped: a table
-    //    an engine can't raw-read (events' ns timestamps go through
-    //    Tables.events in real queries) must not kill the bench.
+    //    bare count() would read only footers). events goes through
+    //    its real loader (Tables.events: ns timestamps need the nanos
+    //    conf, a raw read throws).
     //    The summed value is the hash SHIFTED DOWN 40 bits (same trick
     //    as calibProbe, r21): ANSI mode is on, and a bare sum of full
     //    64-bit hashes overflows long partway through a large table —
@@ -70,11 +36,25 @@ object Bench {
     //    write — the query's contract is the SERVING shape
     //    (write-once table, scaladoc), so ingest cost belongs to
     //    warm-up, not to its timed run.
+    //
+    // No warm-up leg may kill the bench, and none may fail silently
+    // either: each failure is logged to stderr with its leg tag and
+    // listed in the sidecar's warm_failed.
+    val warmFailed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def warm(tag: String)(body: => Unit): Unit =
+      try body
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          warmFailed += tag
+          System.err.println(s"[bench] warm-up $tag FAILED: ${e.getClass.getName}: ${e.getMessage}")
+      }
     new java.io.File(sfDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .foreach { f =>
-        scala.util.Try {
-          val df = spark.read.parquet(f.getPath)
+        warm(s"sweep:${f.getName}") {
+          val df =
+            if (f.getName == "events.parquet") Tables.events(spark, sfDir)
+            else spark.read.parquet(f.getPath)
           // .head(), NOT .count(): count() over an aggregate lets
           // Catalyst prune the hash down to a zero-column footer scan
           // (optimized plan: Aggregate[count(1)] over ReadSchema
@@ -85,14 +65,6 @@ object Bench {
             .agg(sum(col("h"))).head()
         }
       }
-    // events needs the nanos conf (Tables.events) — the raw sweep above
-    // skips it, so warm it through the real loader
-    scala.util.Try {
-      val ev = Tables.events(spark, sfDir)
-      ev.select(shiftrightunsigned(
-          xxhash64(struct(ev.columns.map(col).toIndexedSeq: _*)), 40).as("h"))
-        .agg(sum(col("h"))).head()
-    }
     val region = spark.read.parquet(s"$sfDir/region.parquet")
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     nation.join(broadcast(region), nation("n_regionkey") === region("r_regionkey")).count()
@@ -145,9 +117,9 @@ object Bench {
       // r16: sim_ann_ivfpq_rerank 6.77 first vs 1.68 rerun,
       // dedup_minhash_lsh16 3.60 vs 2.90 — cold ivfpq codes / 16-wide
       // signature reads, not plan cost). Same xxhash64-over-struct
-      // trick; try-wrapped like the table sweep.
+      // trick; failure-logged like the table sweep.
       viewPaths.foreach { p =>
-        scala.util.Try {
+        warm(s"view:${new java.io.File(p).getName}") {
           val df = spark.read.parquet(p)
           // shifted like the table sweep — same ANSI overflow trap
           df.select(shiftrightunsigned(
@@ -205,7 +177,7 @@ object Bench {
         "sql_pricing", "sql_correlated", "sql_cte_window",
         "sql_ddl_ctas", "profile_fanout",
         "maint_snapshot_diff").foreach { n =>
-        scala.util.Try {
+        warm(s"codegen:$n") {
           val plan = Registry.byName(n).run(spark, sfDir).queryExecution.executedPlan
           org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
         }
@@ -239,7 +211,7 @@ object Bench {
           .start()
         q.awaitTermination()
       }
-      scala.util.Try {
+      warm("stream:fm") {
         import graft.streaming.StatefulDemos
         val fmS = spark.newSession()
         fmS.conf.set("spark.sql.shuffle.partitions", "1")
@@ -248,7 +220,7 @@ object Bench {
             fmS, StatefulDemos.chunkedEventsStream(fmS, sfDir).filter(col("user_id") === -1)),
           "fm")
       }
-      scala.util.Try {
+      warm("stream:tws") {
         import graft.streaming.StatefulDemos
         val twsS = spark.newSession()
         twsS.conf.set("spark.sql.shuffle.partitions", "1")
@@ -420,6 +392,7 @@ object Bench {
     // query drew the first slot absorbed any residual warm-up
     // (round 6's one unexplained number, join_null_safe_eq at 5.1 s,
     // was exactly such a first-slot artifact suspect).
+    val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val results = Registry.all
       .filter(q => only.isEmpty || only(q.name))
       .map { q =>
@@ -427,7 +400,14 @@ object Bench {
       auditTag.get(name).foreach(probeAuditEnv)
       val gc0 = gcMillis
       val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      // A row that throws keeps its time-to-failure in the queries map
+      // (the stdout line's shape is a fixed contract), so the failure
+      // itself must be named: stderr now, `failed` in the sidecar.
+      try { q.run(spark, sfDir).count() } catch {
+        case e: Throwable =>
+          failed += name -> e.getClass.getName
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       val gcDt = gcMillis - gc0
       val dropped = dropDeadBlocks()
@@ -648,7 +628,8 @@ object Bench {
 "gc_ms":$gcs,
 "min2":$min2Json,"min2_detail":$min2DetailJson,"min2_memo_cleared":$min2McJson${BenchFmt.mcRetryJson(mcRetries.toSeq)},
 "stream_eq_families":{"first":${secMapJson(streamEqFams)},"memo_cleared":${secMapJson(famsMc)}},
-"state_parity_machines":{"first":${secMapJson(parityMachines)},"memo_cleared":${secMapJson(parityMc)}}$slowDetail}
+"state_parity_machines":{"first":${secMapJson(parityMachines)},"memo_cleared":${secMapJson(parityMc)}}$slowDetail,
+${BenchFmt.failuresJson(failed.toSeq, warmFailed.toSeq)}}
 """
       // Path resolution (ADVICE r18): a bare relative path lands the
       // sidecar in whatever cwd the JVM was launched from — silently

@@ -98,6 +98,17 @@ object BenchFmt {
     else m.map { case (k, (a, b)) => f""""$k":[$a%.3f,$b%.3f]""" }
       .mkString(""","mc_retry":{""", ",", "}")
 
+  /** The sidecar's failure record: `"failed"` maps each registry row
+    * that threw to its exception class, `"warm_failed"` lists the
+    * warm-up leg tags that threw. Both are always present, so an empty
+    * map/list is a positive statement that nothing failed. Sidecar-only:
+    * the stdout tail budget is untouched. */
+  def failuresJson(failed: Seq[(String, String)], warmFailed: Seq[String]): String = {
+    def str(x: String): String = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val rows = failed.map { case (k, v) => s"${str(k)}:${str(v)}" }.mkString("{", ",", "}")
+    s""""failed":$rows,"warm_failed":${warmFailed.map(str).mkString("[", ",", "]")}"""
+  }
+
   /** The final compact line — the one the driver parses; must print
     * LAST and fit the tail whole alongside the parity stanza. */
   def compactLine(

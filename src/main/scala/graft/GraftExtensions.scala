@@ -10,8 +10,8 @@ import org.apache.spark.sql.graftx.{AsOfJoinStrategy, GraftFunctions, TopKPerGro
   * }}}
   *
   * injects the engine's planner strategies into every session built
-  * from that conf. Sessions the engine does not build (the driver's
-  * Verify/Bench sessions here) get the same strategies at first use via
+  * from that conf. Sessions built without it (every [[Sessions.local]]
+  * session here) get the same strategies at first use via
   * `TopKPerGroup.register`, which is idempotent — both paths end with
   * the same planner.
   */

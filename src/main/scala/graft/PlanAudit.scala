@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: one-line physical-plan audit per registry query — counts
   * of shuffle exchanges / sorts and the join strategies chosen, to
   * catch plans that would not survive a 100× scale-up (stray cartesian
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val interesting = Seq(
       "Exchange", "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",

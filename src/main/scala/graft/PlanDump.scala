@@ -1,92 +1,125 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev tool: dump `explain("formatted")` for the headline queries into
-  * PLANS.md — the committed evidence for the plan shapes SCALING.md
-  * claims (pushdown, broadcasts, partial top-k, no stray exchanges).
-  * Run: `sbt "runMain graft.PlanDump /root/testdata/sf0.001"`.
+/** Dev tool: dump `explain("formatted")` plans.
+  *
+  *   - With no query names it writes the headline battery into one
+  *     markdown file (default PLANS.md) — the committed evidence for
+  *     the plan shapes SCALING.md claims (pushdown, broadcasts, partial
+  *     top-k, no stray exchanges). PLANS.md is generated at the default
+  *     4 cores.
+  *   - With names it writes one `<name>.txt` per name into the output
+  *     directory — the before/after evidence of an optimization that
+  *     touches a few rows, without regenerating the battery. A name is
+  *     a registry row or one of the [[extra]] stage frames.
+  *
+  * Run: `sbt "runMain graft.PlanDump <sfDir> [out] [name ...]"`
+  * (env `SPARK_GRAFT_CPUS` as in [[Bench]], default 4).
   */
 object PlanDump {
+  /** Non-registry frames worth plan evidence: internal stages whose
+    * shape a spec pins but whose registry row hides them behind a
+    * lineage truncate (the composed corpus builds read a LogicalRDD,
+    * so only the STAGE plan shows the join shapes). */
+  private val extra: Map[String, (SparkSession, String) => DataFrame] =
+    Map(
+      "bestkeep_flagpass" -> ((s, d) => operators.Sampling.corpusBuildFlagsBestKeep(s, d)),
+      "corpus_flagpass"   -> ((s, d) => operators.Sampling.corpusBuildFlags(s, d))
+    )
+
+  private val headline = Seq(
+    "agg_group_pricing", "join_broadcast_dims", "win_top3_per_group", "win_top3_topk",
+    "ts_tumbling_1h", "sim_cosine_topk", "dedup_near_jaccard", "src_scan_pushdown",
+    "src_dsv2_agg", "text_tfidf_top", "agg_decimal_pricing", "text_contamination",
+    "sim_ann_ivf_persisted", "join_dpp_prune", "maint_incremental_agg",
+    "graph_pagerank", "sim_coarse_rerank", "agg_theta_overlap",
+    "dedup_ngram_exact", "text_bm25_topk", "join_asof_native_nearest",
+    "join_bloom_prune", "sim_hybrid_rrf", "dedup_semantic",
+    "dedup_incremental_persisted", "profile_fanout", "sample_reservoir",
+    "ts_stl_decompose", "ml_auc", "text_ngram_novelty", "ts_periodogram",
+    "ml_logreg_gd",
+    // round 8: the Grids two-level rewrites, the materialized BFS, the
+    // geometry-audited LSH family, and the judge-requested r7 gaps
+    "graph_bfs_reach", "sample_bootstrap_ci", "events_dau_wau",
+    "dedup_lsh_recall_report", "dedup_minhash_lsh16", "ml_feature_bins",
+    "ml_lift_gains", "pipeline_curriculum", "ml_ks_test",
+    // round 9: the serving-view consumers (pair-manifest clustering,
+    // persisted LSH / BM25 index twins)
+    "dedup_clusters", "sim_ann_lsh_persisted", "text_bm25_persisted", "graph_lift",
+    // round 10: the signature-table sweep's serving consumers + the
+    // incremental minhash screen against the persisted table
+    "dedup_containment", "dedup_simhash_pairs", "dedup_minhash_incremental",
+    // round 12: the PQ index family (ADC scan + two-stage re-rank),
+    // the IVF-PQ residual composition, and the BPE encode serve path
+    "sim_ann_pq", "sim_ann_pq_rerank", "sim_ann_ivfpq", "sim_ann_ivfpq_nprobe_report",
+    "text_bpe_encode", "text_bpe_drift",
+    // round 13: the cross-family ANN comparison, the wide-budget BPE
+    // training probe, and the two pipeline-governance audits
+    "sim_ann_family_report", "text_bpe_train_wide",
+    "pipeline_split_leakage", "maint_forget_report",
+    // round 14: content-defined chunking dedup, the token-budget
+    // curation cut (Grids cumulative), and the IVF diversity sampler
+    "dedup_cdc_chunks", "dedup_cdc_incremental", "pipeline_token_budget",
+    "sample_diverse_ivf",
+    // round 15: the SQL-text native-kernel rows and the view-served
+    // multimodal feature scan
+    "sql_sorted_intersect", "sql_bloom_filter", "mm_decode_features",
+    // round 16: the skew-stress row (VERDICT r15 #7 asked for the
+    // salted SHUFFLE shape committed as plan evidence: salt in the
+    // join keys, ShuffledHashJoin, no broadcast)
+    "join_skew_stress",
+    // round 19: the end-to-end corpus-build composition (VERDICT r18
+    // #1 — the PLANS entry is the evidence its dedup/contamination
+    // verdicts are SERVED from the persisted views, not recomputed)
+    // and the intra-source boilerplate removal stage
+    "pipeline_corpus_build", "dedup_boilerplate",
+    // round 20: the survivor-policy corpus-build variant (verdicts
+    // from the memoized cluster-keeper frame, zero re-scans), the
+    // corpus-level CCNet-style paragraph removal, and the blocking
+    // density probe
+    "pipeline_corpus_build_bestkeep", "dedup_boilerplate_global",
+    "dedup_ngram_blocking_probe", "pipeline_boilerplate_rewrite"
+  )
+
+  private def plan(df: DataFrame): String =
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      // embedded binary literals (e.g. the bloom filter) render as
+      // kilobytes of hex — keep a recognizable 16-hex-char head only
+      .replaceAll("(0x[0-9A-Fa-f]{16})[0-9A-Fa-f]{48,}", "$1<binary literal, truncated>")
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val headline = Seq(
-      "agg_group_pricing", "join_broadcast_dims", "win_top3_per_group", "win_top3_topk",
-      "ts_tumbling_1h", "sim_cosine_topk", "dedup_near_jaccard", "src_scan_pushdown",
-      "src_dsv2_agg", "text_tfidf_top", "agg_decimal_pricing", "text_contamination",
-      "sim_ann_ivf_persisted", "join_dpp_prune", "maint_incremental_agg",
-      "graph_pagerank", "sim_coarse_rerank", "agg_theta_overlap",
-      "dedup_ngram_exact", "text_bm25_topk", "join_asof_native_nearest",
-      "join_bloom_prune", "sim_hybrid_rrf", "dedup_semantic",
-      "dedup_incremental_persisted", "profile_fanout", "sample_reservoir",
-      "ts_stl_decompose", "ml_auc", "text_ngram_novelty", "ts_periodogram",
-      "ml_logreg_gd",
-      // round 8: the Grids two-level rewrites, the materialized BFS, the
-      // geometry-audited LSH family, and the judge-requested r7 gaps
-      "graph_bfs_reach", "sample_bootstrap_ci", "events_dau_wau",
-      "dedup_lsh_recall_report", "dedup_minhash_lsh16", "ml_feature_bins",
-      "ml_lift_gains", "pipeline_curriculum", "ml_ks_test",
-      // round 9: the serving-view consumers (pair-manifest clustering,
-      // persisted LSH / BM25 index twins)
-      "dedup_clusters", "sim_ann_lsh_persisted", "text_bm25_persisted", "graph_lift",
-      // round 10: the signature-table sweep's serving consumers + the
-      // incremental minhash screen against the persisted table
-      "dedup_containment", "dedup_simhash_pairs", "dedup_minhash_incremental",
-      // round 12: the PQ index family (ADC scan + two-stage re-rank),
-      // the IVF-PQ residual composition, and the BPE encode serve path
-      "sim_ann_pq", "sim_ann_pq_rerank", "sim_ann_ivfpq", "sim_ann_ivfpq_nprobe_report",
-      "text_bpe_encode", "text_bpe_drift",
-      // round 13: the cross-family ANN comparison, the wide-budget BPE
-      // training probe, and the two pipeline-governance audits
-      "sim_ann_family_report", "text_bpe_train_wide",
-      "pipeline_split_leakage", "maint_forget_report",
-      // round 14: content-defined chunking dedup, the token-budget
-      // curation cut (Grids cumulative), and the IVF diversity sampler
-      "dedup_cdc_chunks", "dedup_cdc_incremental", "pipeline_token_budget",
-      "sample_diverse_ivf",
-      // round 15: the SQL-text native-kernel rows and the view-served
-      // multimodal feature scan
-      "sql_sorted_intersect", "sql_bloom_filter", "mm_decode_features",
-      // round 16: the skew-stress row (VERDICT r15 #7 asked for the
-      // salted SHUFFLE shape committed as plan evidence: salt in the
-      // join keys, ShuffledHashJoin, no broadcast)
-      "join_skew_stress",
-      // round 19: the end-to-end corpus-build composition (VERDICT r18
-      // #1 — the PLANS entry is the evidence its dedup/contamination
-      // verdicts are SERVED from the persisted views, not recomputed)
-      // and the intra-source boilerplate removal stage
-      "pipeline_corpus_build", "dedup_boilerplate",
-      // round 20: the survivor-policy corpus-build variant (verdicts
-      // from the memoized cluster-keeper frame, zero re-scans), the
-      // corpus-level CCNet-style paragraph removal, and the blocking
-      // density probe
-      "pipeline_corpus_build_bestkeep", "dedup_boilerplate_global",
-      "dedup_ngram_blocking_probe", "pipeline_boilerplate_rewrite"
-    )
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` at $dir. These are the plans the\n")
-    sb.append("SCALING.md claims rest on — regenerate after planner-affecting\nchanges.\n")
-    for (name <- headline) {
-      val df = Registry.byName(name).run(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-        // embedded binary literals (e.g. the bloom filter) render as
-        // kilobytes of hex — keep a recognizable 16-hex-char head only
-        .replaceAll("(0x[0-9A-Fa-f]{16})[0-9A-Fa-f]{48,}", "$1<binary literal, truncated>")
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+    val names = args.drop(2).toSeq
+    val unknown = names.filterNot(n => Registry.byName.contains(n) || extra.contains(n))
+    if (unknown.nonEmpty) {
+      System.err.println(s"[plandump] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
-    println(s"[plandump] wrote $out")
+    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Sessions.local(s"local[$cpus]", cpus.toInt)
+    spark.sparkContext.setLogLevel("ERROR")
+    if (names.nonEmpty) {
+      val outDir = java.nio.file.Paths.get(args.lift(1).getOrElse("plans"))
+      java.nio.file.Files.createDirectories(outDir)
+      for (name <- names) {
+        val df = extra.get(name).fold(Registry.byName(name).run(spark, dir))(_(spark, dir))
+        val p  = outDir.resolve(s"$name.txt")
+        java.nio.file.Files.writeString(p, plan(df))
+        println(s"[plandump] wrote $p")
+      }
+    } else {
+      val out = args.lift(1).getOrElse("PLANS.md")
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+      sb.append(s"Generated by `graft.PlanDump` at $dir. These are the plans the\n")
+      sb.append("SCALING.md claims rest on — regenerate after planner-affecting\nchanges.\n")
+      for (name <- headline) {
+        sb.append(s"\n## $name\n\n```\n${plan(Registry.byName(name).run(spark, dir))}```\n")
+      }
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
+      println(s"[plandump] wrote $out")
+    }
     spark.stop()
   }
 }

@@ -306,15 +306,15 @@ object Dedup {
     * doc that HAS shingles (0/nb = 0), so the filter only removes the
     * NaN artifact, never a real pair. */
   /** The ngram row's per-doc signature frame (doc_id, lang, s = sorted
-    * distinct 64-bit bigram hashes, ns, bkt), shared with the
-    * [[graft.NgramFloor]] decomposition probe.
+    * distinct 64-bit bigram hashes, ns, bkt).
     *
     * Bigram hashes are a ROLLING MIX over per-token xxhash64 — h(t1)
     * XOR rot13(h(t2)) — never materialized strings (r19, VERDICT r18
     * #6): the r18 spelling concatenated every bigram string and md5'd
-    * it, and NgramFloor measured that build at 0.93 s of the row's
-    * 1.76 s warm floor at sf0.1, PAID TWICE (once per join side). The
-    * mix is [[graft.operators.TextAnalysis.contamShinglesBuild]]'s
+    * it, and a stage-decomposition probe measured that build at 0.93 s
+    * of the row's 1.76 s warm floor at sf0.1, PAID TWICE (once per join
+    * side; SCALING.md). The mix is
+    * [[graft.operators.TextAnalysis.contamShinglesBuild]]'s
     * technique at n = 2 (its measured 7× there), and position
     * sensitivity is preserved (rot13 of the second token ≠ rot13 of
     * the first, so "a b" ≠ "b a"). The DuckDB oracle keeps exact
@@ -434,9 +434,9 @@ object Dedup {
     * 169,253 distinct candidates from 547,195 intermediate rows vs the
     * grid's 245,817 generate-and-verify — the dense bigram space
     * (≤ 31² shingles) makes every prefix element corpus-hot, so the
-    * grid wins on total volume (NgramFloor's wall-clock A/B
-    * corroborates: 1.43 s grid vs 1.1-1.5 s prefix across windows, a
-    * wash — first-order model, kernel work per grid candidate costs
+    * grid wins on total volume (a wall-clock A/B corroborates: 1.43 s
+    * grid vs 1.1-1.5 s prefix across windows, a wash — first-order
+    * model, kernel work per grid candidate costs
     * more than a hash-join intermediate row). On a sparse vocabulary
     * the intermediate collapses and prefix wins by orders of magnitude.
     * NgramBlockingSpec pins BOTH verdicts (the real fixture → grid; a
@@ -1443,11 +1443,16 @@ object Dedup {
     * sf0.1, and the same round is the standard first step of
     * distributed CC at 100 TB (each round is one aggregate + one
     * projection; add rounds before the loop if the quotient is still
-    * large). */
-  private def ccLabels(
+    * large).
+    *
+    * `maxRounds` bounds the contraction rounds (1 = the single round
+    * above); a further round runs only while the quotient has more
+    * than `minEdges` edges. */
+  private[graft] def ccLabels(
       edges: DataFrame,
       seeds: DataFrame,
-      recontract: Boolean = false): DataFrame = {
+      maxRounds: Int = 1,
+      minEdges: Long = 1024L): DataFrame = {
     // symmetrize via explode, NOT union(edges, edges.reversed): a
     // union would run the edge derivation once per branch. NOT
     // checkpointed (r20): both consumers (l0, ce) are one linear pass
@@ -1482,7 +1487,7 @@ object Dedup {
     // preserving merge, applied to the previous round's quotient —
     // supernode ids are member doc_ids at every level, so the composed
     // labels stay the component minima. Only CALLERS that may feed a
-    // large graph opt in (recontract = the full-manifest keeper path):
+    // large graph opt in (maxRounds > 1: the full-manifest keeper path):
     // the scoped probe rows' quotients are a few hundred edges by
     // construction, and even the GATE's count job (one cheap job over
     // the just-checkpointed quotient) measured as a visible ~0.05–0.1 s
@@ -1492,11 +1497,7 @@ object Dedup {
     // Interleaved A/B at sf0.1/32, min/median of 5: bestkeep 3.04/3.18
     // (round 2: 1988 → 56 edges) vs 3.34/3.58; forcing round 2 on the
     // scoped rows regressed them ~+0.3 s each.
-    val maxRounds = edges.sparkSession.conf
-      .getOption("spark.graft.cc.rounds").map(_.toInt).getOrElse(if (recontract) 3 else 1)
-    val minEdges = edges.sparkSession.conf
-      .getOption("spark.graft.cc.recontract.minedges").map(_.toLong).getOrElse(1024L)
-    var levelMaps = List(l0) // innermost first
+    var levelMaps = List(l0) // outermost first: the unwind below depends on it
     var q = ce
     var round = 1
     var qn = -1L
@@ -1661,7 +1662,7 @@ object Dedup {
     val endpoints = pairs
       .select(explode(array(col("ida"), col("idb"))).as("doc_id"))
       .distinct()
-    val labels = ccLabels(pairs, endpoints, recontract = true)
+    val labels = ccLabels(pairs, endpoints, maxRounds = 3)
     val withChars = labels.join(
       Tables.documents(spark, dir).select(col("doc_id"), col("n_chars")),
       Seq("doc_id"))

@@ -108,4 +108,15 @@ class BenchFmtSpec extends AnyFunSuite {
     assert(!BenchFmt.retryTriggered(calibMc = 0.300, ioMc = -1.0, runCalib = 0.296))
     assert(BenchFmt.retryTriggered(calibMc = 0.400, ioMc = -1.0, runCalib = 0.296))
   }
+
+  test("sidecar failure record names failed rows and warm-up legs, and is explicit when empty") {
+    assert(BenchFmt.failuresJson(Nil, Nil) === "\"failed\":{},\"warm_failed\":[]")
+    assert(BenchFmt.failuresJson(
+        Seq("sql_pricing" -> "org.apache.spark.SparkException"),
+        Seq("stream:tws", "sweep:events.parquet")) ===
+      "\"failed\":{\"sql_pricing\":\"org.apache.spark.SparkException\"}," +
+        "\"warm_failed\":[\"stream:tws\",\"sweep:events.parquet\"]")
+    // a tag carrying a quote stays valid JSON
+    assert(BenchFmt.failuresJson(Nil, Seq("view:a\"b")) === "\"failed\":{},\"warm_failed\":[\"view:a\\\"b\"]")
+  }
 }

@@ -658,4 +658,29 @@ class DedupSpec extends SparkSuite {
     assert(a.nonEmpty && a.sameElements(b))
   }
 
+  test("multi-level CC contraction (size gate forced open) gives the single-round labels") {
+    // The size gate (minEdges = 1024) never opens at test scale, so
+    // without minEdges = 0 the extra rounds and their outermost-first
+    // unwind would run nowhere in the suite.
+    import spark.implicits._
+    def labels(edges: org.apache.spark.sql.DataFrame, rounds: Int): Map[Long, Long] = {
+      val seeds = edges.select(explode(array(col("ida"), col("idb"))).as("doc_id")).distinct()
+      operators.Dedup.ccLabels(edges, seeds, maxRounds = rounds, minEdges = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    def mismatches(a: Map[Long, Long], b: Map[Long, Long]): Int =
+      (a.keySet ++ b.keySet).count(k => a.get(k) != b.get(k))
+    val manifest = spark.read.parquet(operators.Dedup.pairTablePath(spark, sf))
+      .select(col("ida"), col("idb"))
+    val one = labels(manifest, 1)
+    assert(one.nonEmpty, "fixture manifest must contain pairs")
+    assert(mismatches(labels(manifest, 3), one) == 0)
+    // Two paths: star contraction shortens a path by about one node per
+    // round, so every extra round leaves a non-empty quotient and the
+    // unwind crosses three levels. A wrong unwind order mislabels it.
+    val paths = ((1L until 40L) ++ (101L until 140L)).map(i => (i, i + 1)).toDF("ida", "idb")
+    val expect = ((1L to 40L).map(_ -> 1L) ++ (101L to 140L).map(_ -> 101L)).toMap
+    assert(mismatches(labels(paths, 1), expect) == 0)
+    assert(mismatches(labels(paths, 3), expect) == 0)
+  }
 }
